@@ -13,12 +13,12 @@ Prints ONE JSON line:
    "unit": "events/sec", "queries": {name: sec, ...}, "sf": ...,
    "cdc": {...}, "cpus": N}
 
-Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (parallelism — the N vs
-4N scaling evidence runs this script at 8 and 32), SPARK_GRAFT_BENCH_EVENTS
-(change-stream size, default 8_000_000), SPARK_GRAFT_BENCH_BATCHES
-(default 1), SPARK_GRAFT_BENCH_CDC_RUNS (timed replays, best-of with
-min/median/max reported, default 3), SPARK_GRAFT_BENCH_QUERY_RUNS
-(per-query, best-of, default 2).
+Env knobs: SPARK_GRAFT_SF_DIR, SPARK_GRAFT_CPUS (parallelism, default
+every core — the N vs 4N scaling evidence runs this script at N and 4N),
+SPARK_GRAFT_BENCH_EVENTS (change-stream size, default 8_000_000),
+SPARK_GRAFT_BENCH_BATCHES (default 1), SPARK_GRAFT_BENCH_CDC_RUNS
+(timed replays, best-of with min/median/max reported, default 3),
+SPARK_GRAFT_BENCH_QUERY_RUNS (per-query, best-of, default 2).
 
 Default sizing rationale: the metric is SUSTAINED events/sec, and each
 micro-batch carries a ~2 s constant driver term (planning + commit).
@@ -140,7 +140,7 @@ def bench_queries(spark, sf_dir: str, runs: int = 2) -> tuple[dict[str, float], 
 
 def main() -> None:
     sf_dir = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    cpus = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
+    cpus = int(os.environ.get("SPARK_GRAFT_CPUS") or os.cpu_count())
     n_events = int(os.environ.get("SPARK_GRAFT_BENCH_EVENTS", "8000000"))
     n_batches = int(os.environ.get("SPARK_GRAFT_BENCH_BATCHES", "1"))
     sf = float(sf_dir.rstrip("/").rsplit("sf", 1)[-1]) if "sf" in sf_dir else None

@@ -24,9 +24,10 @@ def get_spark(
 ) -> SparkSession:
     """Build (or fetch) the session.
 
-    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` so the bench
-    harness can pin parallelism (the N vs 4N scaling evidence runs the
-    identical job at local[8] and local[32]).
+    ``master`` defaults to ``local[$SPARK_GRAFT_CPUS]`` (every core
+    when unset) so the bench harness can pin parallelism (the N vs 4N
+    scaling evidence runs the identical job at ``local[N]`` and
+    ``local[4N]``, e.g. 1 and 4 cores on a 4-vCPU host).
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "*")
     master = master or f"local[{cpus}]"

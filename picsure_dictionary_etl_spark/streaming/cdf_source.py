@@ -25,11 +25,12 @@ Scale design (mirrors :func:`~..lake.merge.table_changes` exactly):
   without the tuple-at-a-time conversion path, so a hot bucket with
   millions of resolved rows stays a columnar pipeline end to end.
 * **LWW parity is bit-exact**: the per-bucket resolve orders rows by
-  ``(_lsn, xxhash64(payload..., _op))`` using a pure-Python
-  Spark-compatible XXH64 (verified against ``F.xxhash64`` in tests), so
-  equal-LSN ties pick the SAME winner the engine does — never bare-LSN
-  ordering (the r3 determinism rule). The tie hash is the ONLY per-row
-  Python left, and it runs only inside equal-LSN tie groups.
+  ``(_lsn, xxhash64(payload..., _op))`` using the package's one
+  runtime XXH64, the vectorized numpy twin in :mod:`.xxhash_vec`
+  (verified against ``F.xxhash64`` in tests), so equal-LSN ties pick
+  the SAME winner the engine does — never bare-LSN ordering (the r3
+  determinism rule). The hash runs only inside equal-LSN tie groups,
+  whole-column for every payload type, nested included.
 * **NaN is a value, null is null** for double payloads, end to end: the
   bucket read materializes pandas *nullable* dtypes (parquet NULL ->
   ``pd.NA`` mask, stored NaN stays a float value), the diff compares
@@ -66,7 +67,7 @@ surface — since r6 that surface includes float, date, binary,
 ``decimal(p,s)`` at ANY precision (p<=18 hashes the unscaled LONG,
 wider the ``BigInteger.toByteArray`` twos-complement bytes — both
 Spark-bit-equal), ``timestamp_ntz``, and ``array``/``struct``/``map``
-nesting at ANY depth over the FULL scalar set (recursive
+nesting at ANY depth over the FULL scalar set (vectorized
 element-chained hashing with null-skip, recursive vectorized
 element-wise diff; maps hash/compare as their canonical KEY-SORTED
 entry arrays — the engine's ``_canon_col`` rewrite, since Spark's raw
@@ -102,91 +103,21 @@ from pyspark.sql.datasource import (
 )
 
 from picsure_dictionary_etl_spark.lake.table import META_DIR, VERSION_FILE, Snapshot
-
-# ---------------------------------------------------------------------------
-# Spark-compatible XXH64 (pure python; verified against F.xxhash64)
-# ---------------------------------------------------------------------------
-
-_M = 0xFFFFFFFFFFFFFFFF
-_P1 = 0x9E3779B185EBCA87
-_P2 = 0xC2B2AE3D27D4EB4F
-_P3 = 0x165667B19E3779F9
-_P4 = 0x85EBCA77C2B2AE63
-_P5 = 0x27D4EB2F165667C5
+from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
+    _canon_map_arrow,
+    _map_entries_td,
+    _parse_type,
+    spark_xxhash64_vec,
+)
 
 
-def _rotl(x: int, r: int) -> int:
-    return ((x << r) | (x >> (64 - r))) & _M
-
-
-def _fmix(h: int) -> int:
-    h ^= h >> 33
-    h = (h * _P2) & _M
-    h ^= h >> 29
-    h = (h * _P3) & _M
-    h ^= h >> 32
-    return h
-
-
-def _hash_int(v: int, seed: int) -> int:
-    h = (seed + _P5 + 4) & _M
-    h ^= ((v & 0xFFFFFFFF) * _P1) & _M
-    h = (_rotl(h, 23) * _P2 + _P3) & _M
-    return _fmix(h)
-
-
-def _hash_long(v: int, seed: int) -> int:
-    h = (seed + _P5 + 8) & _M
-    h ^= (_rotl((v * _P2) & _M, 31) * _P1) & _M
-    h = (_rotl(h, 27) * _P1 + _P4) & _M
-    return _fmix(h)
-
-
-def _hash_bytes(data: bytes, seed: int) -> int:
-    n = len(data)
-    i = 0
-    if n >= 32:
-        acc = [
-            (seed + _P1 + _P2) & _M,
-            (seed + _P2) & _M,
-            seed & _M,
-            (seed - _P1) & _M,
-        ]
-        while i <= n - 32:
-            for lane in range(4):
-                k = int.from_bytes(data[i + 8 * lane : i + 8 * lane + 8], "little")
-                acc[lane] = (_rotl((acc[lane] + k * _P2) & _M, 31) * _P1) & _M
-            i += 32
-        h = (
-            _rotl(acc[0], 1) + _rotl(acc[1], 7) + _rotl(acc[2], 12) + _rotl(acc[3], 18)
-        ) & _M
-        for v in acc:
-            h ^= (_rotl((v * _P2) & _M, 31) * _P1) & _M
-            h = (h * _P1 + _P4) & _M
-    else:
-        h = (seed + _P5) & _M
-    h = (h + n) & _M
-    while i <= n - 8:
-        k = int.from_bytes(data[i : i + 8], "little")
-        h ^= (_rotl((k * _P2) & _M, 31) * _P1) & _M
-        h = (_rotl(h, 27) * _P1 + _P4) & _M
-        i += 8
-    if i <= n - 4:
-        k = int.from_bytes(data[i : i + 4], "little")
-        h ^= (k * _P1) & _M
-        h = (_rotl(h, 23) * _P2 + _P3) & _M
-        i += 4
-    while i < n:
-        h ^= (data[i] * _P5) & _M
-        h = (_rotl(h, 11) * _P1) & _M
-        i += 1
-    return _fmix(h)
-
-
-# The payload/key column types the executor path supports end to end
-# (tie-break hash twin + vectorized diff + arrow output). Enforced at
-# PLAN time by _check_supported — an unsupported column must fail at
-# stream start, not mid-batch on the first equal-LSN tie.
+# The scalar payload/key column types the executor path supports end
+# to end (tie-break hash + vectorized diff + arrow output), at the top
+# level and inside array/struct/map alike (nested timestamps work
+# because _to_arrow_batches casts each output array to the declared
+# arrow type). Enforced at PLAN time by _check_supported — an
+# unsupported column must fail at stream start, not mid-batch on the
+# first equal-LSN tie.
 SUPPORTED_TYPES = frozenset(
     {
         "string",
@@ -208,83 +139,23 @@ SUPPORTED_TYPES = frozenset(
     }
 )
 
-# Scalar types additionally allowed INSIDE array<>/struct<> — the full
-# scalar surface: nested timestamps work because _to_arrow_batches
-# casts each output array to the declared arrow type (from_pandas
-# SILENTLY ignores a requested tz on arrow-backed input: a naive
-# list<timestamp[us]> stays naive where Spark's schema wants
-# tz-aware — the cast localizes the session-UTC micros explicitly).
-NESTED_SCALAR_TYPES = SUPPORTED_TYPES
-
-_DECIMAL_RE = __import__("re").compile(r"^decimal\((\d+),(\d+)\)$")
-
-from functools import lru_cache as _lru_cache
-
-
-def _split_top(s: str) -> list[str]:
-    """Split a simpleString field list on TOP-LEVEL commas only
-    (nested ``array<struct<a:int,b:int>>`` commas don't count; neither
-    does the comma inside ``decimal(16,2)`` — parens nest too)."""
-    parts, depth, cur = [], 0, []
-    for ch in s:
-        if ch in "<(":
-            depth += 1
-        elif ch in ">)":
-            depth -= 1
-        if ch == "," and depth == 0:
-            parts.append("".join(cur))
-            cur = []
-        else:
-            cur.append(ch)
-    if cur:
-        parts.append("".join(cur))
-    return parts
-
-
-@_lru_cache(maxsize=None)
-def _parse_type(t: str):
-    """Spark simpleString -> type descriptor tree:
-    ('scalar', name) | ('decimal', p, s) | ('array', elem_td) |
-    ('struct', ((field_name, field_td), ...)) | ('other', raw)."""
-    t = t.strip()
-    m = _DECIMAL_RE.match(t)
-    if m:
-        return ("decimal", int(m.group(1)), int(m.group(2)))
-    if t.startswith("array<") and t.endswith(">"):
-        return ("array", _parse_type(t[6:-1]))
-    if t.startswith("map<") and t.endswith(">"):
-        kt, vt = _split_top(t[4:-1])
-        return ("map", _parse_type(kt), _parse_type(vt))
-    if t.startswith("struct<") and t.endswith(">"):
-        fields = []
-        for part in _split_top(t[7:-1]):
-            name, sub = part.split(":", 1)
-            fields.append((name, _parse_type(sub)))
-        return ("struct", tuple(fields))
-    if "<" in t:  # array-of-array etc. handled by recursion above
-        return ("other", t)
-    return ("scalar", t)
-
-
-def _td_supported(td, nested: bool = False) -> bool:
+def _td_supported(td) -> bool:
     kind = td[0]
     if kind == "decimal":
         return True  # any precision: p<=18 unscaled-long, p>18 byte-array
     if kind == "scalar":
-        return td[1] in (NESTED_SCALAR_TYPES if nested else SUPPORTED_TYPES)
+        return td[1] in SUPPORTED_TYPES
     if kind == "array":
-        return _td_supported(td[1], nested=True)
+        return _td_supported(td[1])
     if kind == "map":
         # keys must be SCALAR (sortable — the canonical form key-sorts
         # the entries; Spark itself guarantees non-null deduped keys);
         # values recurse over the full nested surface.
         return td[1][0] in ("scalar", "decimal") and _td_supported(
-            td[1], nested=True
-        ) and _td_supported(td[2], nested=True)
+            td[1]
+        ) and _td_supported(td[2])
     if kind == "struct":
-        return len(td[1]) > 0 and all(
-            _td_supported(ft, nested=True) for _, ft in td[1]
-        )
+        return len(td[1]) > 0 and all(_td_supported(ft) for _, ft in td[1])
     return False  # udt, ...
 
 
@@ -294,185 +165,12 @@ def _type_supported(t: str) -> bool:
     the unscaled LONG, wider the twos-complement byte array — both
     Spark-bit-equal), plus ``array<...>`` / ``struct<...>`` /
     ``map<scalar,...>`` at ANY nesting depth over that scalar set (the
-    hash twin element-chains recursively; the diff compares
+    vector hash chains elements/fields; the diff compares
     recursively). Maps hash/compare as their CANONICAL key-sorted entry
     arrays — the engine's ``_canon_col`` rewrite (``F.xxhash64`` rejects
-    raw MapType), mirrored bit-equal here. What's left out: map KEYS
-    that are themselves nested (unsortable) and UDTs."""
+    raw MapType), mirrored bit-equal by :mod:`.xxhash_vec`. What's left
+    out: map KEYS that are themselves nested (unsortable) and UDTs."""
     return _td_supported(_parse_type(t))
-
-
-def _java_bigint_bytes(v: int) -> bytes:
-    """``BigInteger.toByteArray()`` twin: big-endian minimal-length
-    twos-complement incl. the sign bit (255 -> b'\\x00\\xff').
-
-    Length follows Java exactly: ``bitLength()/8 + 1`` where Java's
-    ``bitLength`` of a negative v is ``(-v-1).bit_length()`` (e.g.
-    bitLength(-128) == 7 -> ONE byte b'\\x80'). Python's own
-    ``v.bit_length()`` counts the magnitude, which over-lengthens
-    exactly the values v == -2^(8k-1) (-128, -32768, -2^31, ...) with a
-    redundant leading 0xFF — that non-minimal form diverges from
-    Spark's F.xxhash64 on wide decimals (judge r6 ADVICE, high)."""
-    n = (v.bit_length() if v >= 0 else (-v - 1).bit_length()) // 8 + 1
-    return v.to_bytes(n, "big", signed=True)
-
-
-def _is_null_value(v, td) -> bool:
-    """Spark-null test for one value. A float NaN is a VALUE only where
-    the declared type is double/float (Java hashes the canonical NaN
-    bits); in any other scalar slot it means 'missing' (pandas NaN)."""
-    import pandas as pd
-
-    if v is None or v is pd.NA:
-        return True
-    if td[0] == "scalar" and td[1] not in ("double", "float"):
-        try:
-            return v != v  # float('nan') leaked into a non-float slot
-        except (TypeError, ValueError):
-            return False
-    return False
-
-
-def _map_sort_key(v, ktd):
-    """Spark-ordering sort key for ONE map key (non-null by Spark's map
-    construction rules). Float/double: NaN sorts greatest and -0.0
-    ranks equal to 0.0 (Spark normalizes them at map creation, so they
-    can never coexist as distinct keys); everything else sorts by its
-    natural value, matching ``array_sort``'s struct comparison (which
-    never reaches the value field — keys are deduped)."""
-    import pandas as pd
-
-    kind = ktd[0]
-    if kind == "decimal":
-        from decimal import Decimal
-
-        return Decimal(v)
-    t = ktd[1]
-    if t in ("double", "float"):
-        f = float(v)
-        if f != f:
-            return (1, 0.0)  # NaN greatest
-        return (0, 0.0 if f == 0.0 else f)
-    if t in ("timestamp", "timestamp_ntz", "date"):
-        return pd.Timestamp(v).value
-    if t == "binary":
-        return bytes(v)
-    if t == "string":
-        return str(v)  # code-point order == UTF-8 byte order
-    if t == "boolean":
-        return bool(v)
-    return int(v)
-
-
-def _hash_value(v, td, h: int) -> int:
-    """Hash ONE non-null value into the running seed ``h`` exactly as
-    Spark's XxHash64 expression does for its type descriptor ``td``.
-    Arrays element-chain (null elements skipped — verified vs
-    F.xxhash64: [1,null,2] == [1,2], []/NULL leave the hash unchanged);
-    structs field-chain in declared order with the same null-skip; maps
-    hash as their canonical key-sorted entry array (the engine's
-    ``_canon_col(array_sort(map_entries))`` rewrite): entries chain in
-    Spark key order, each entry field-chaining key then non-null
-    value."""
-    import pandas as pd
-
-    kind = td[0]
-    if kind == "map":
-        ktd, vtd = td[1], td[2]
-        items = v.items() if isinstance(v, dict) else list(v)
-        for k, val in sorted(items, key=lambda e: _map_sort_key(e[0], ktd)):
-            h = _hash_value(k, ktd, h)  # map keys are never null
-            if not _is_null_value(val, vtd):
-                h = _hash_value(val, vtd, h)
-        return h
-    if kind == "array":
-        elem_td = td[1]
-        for e in list(v):
-            if not _is_null_value(e, elem_td):
-                h = _hash_value(e, elem_td, h)
-        return h
-    if kind == "struct":
-        vals = (
-            [v.get(name) for name, _ in td[1]]
-            if isinstance(v, dict)
-            else list(v)
-        )
-        for e, (_, ftd) in zip(vals, td[1]):
-            if not _is_null_value(e, ftd):
-                h = _hash_value(e, ftd, h)
-        return h
-    if kind == "decimal":
-        from decimal import Decimal, localcontext
-
-        p, s = td[1], td[2]
-        with localcontext() as ctx:
-            # the DEFAULT context rounds at 28 significant digits —
-            # scaleb on a decimal(30+,s) would silently round the
-            # unscaled value before hashing (caught by parity test)
-            ctx.prec = 80
-            unscaled = int(Decimal(v).scaleb(s).to_integral_value())
-        if p <= 18:  # Spark: unscaled LONG
-            return _hash_long(unscaled & _M, h)
-        return _hash_bytes(_java_bigint_bytes(unscaled), h)  # byte array
-    t = td[1]
-    if t == "string":
-        return _hash_bytes(str(v).encode("utf-8"), h)
-    if t in ("long", "bigint"):
-        return _hash_long(int(v) & _M, h)
-    if t in ("integer", "int", "short", "smallint", "byte", "tinyint"):
-        return _hash_int(int(v) & 0xFFFFFFFF, h)
-    if t == "boolean":
-        return _hash_int(1 if v else 0, h)
-    if t == "timestamp":
-        # Spark hashes timestamps as their micros-since-epoch long
-        ts = pd.Timestamp(v)
-        if ts.tzinfo is None:
-            ts = ts.tz_localize("UTC")
-        return _hash_long(int(ts.value // 1000) & _M, h)
-    if t == "timestamp_ntz":
-        # same micros long, but the naive wall-clock IS the value
-        return _hash_long(int(pd.Timestamp(v).value // 1000) & _M, h)
-    if t == "double":
-        import struct as _struct
-
-        v = float(v)
-        if v != v:  # Java doubleToLongBits collapses every NaN
-            return _hash_long(0x7FF8000000000000, h)
-        d = 0.0 if v == 0.0 else v  # -0.0 normalizes
-        return _hash_long(int.from_bytes(_struct.pack("<d", d), "little"), h)
-    if t == "float":
-        import struct as _struct
-
-        f = float(v)
-        if f != f:  # Float.floatToIntBits collapses every NaN
-            return _hash_int(0x7FC00000, h)
-        f = 0.0 if f == 0.0 else f  # -0.0f normalizes
-        return _hash_int(int.from_bytes(_struct.pack("<f", f), "little"), h)
-    if t == "date":
-        # Spark hashes dates as their days-since-epoch INT
-        days = (pd.Timestamp(v) - pd.Timestamp("1970-01-01")).days
-        return _hash_int(days & 0xFFFFFFFF, h)
-    if t == "binary":
-        return _hash_bytes(bytes(v), h)
-    raise NotImplementedError(f"xxhash64 twin: unsupported type {t}")
-
-
-def spark_xxhash64(values, dtypes, seed: int = 42) -> int:
-    """``F.xxhash64(c1, c2, ...)`` twin: seed-chained per column, null
-    leaves the running hash unchanged, SIGNED int64 result. ``dtypes``
-    are Spark simpleString type names ('string', 'long', 'integer',
-    'timestamp', 'boolean', 'double', 'array<bigint>',
-    'struct<k:string,v:bigint>', 'decimal(30,4)', ...). A NaN in a
-    DOUBLE/FLOAT slot is a VALUE (Spark hashes the canonical NaN bits),
-    so pass pandas nullable dtypes upstream (:func:`_read_bucket`
-    does) — a plain-float64 NaN in any other declared type is treated
-    as null."""
-    h = seed
-    for v, t in zip(values, dtypes):
-        td = _parse_type(t)
-        if not _is_null_value(v, td):
-            h = _hash_value(v, td, h)
-    return h - (1 << 64) if h >= 1 << 63 else h
 
 
 # ---------------------------------------------------------------------------
@@ -582,56 +280,15 @@ def _read_bucket(root: str, rel_files: list[str], cols: list[str], dtypes):
     return df[cols]
 
 
-def _tie_arrow(s, t: str):
-    """One tie-subset pandas column -> a pyarrow array the vectorized
-    XXH64 twin accepts, matching the SCALAR twin's value semantics
-    (masked dtypes keep NaN-as-value vs NA-as-null distinct; decimals
-    build against the DECLARED (p,s) so pyarrow can't infer a
-    different scale and silently change the unscaled value). Nested
-    types raise — the caller takes the scalar fallback."""
-    import pandas as pd
-    import pyarrow as pa
-
-    from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
-        UnsupportedVectorType,
-    )
-
-    td = _parse_type(t)
-    if td[0] not in ("scalar", "decimal"):
-        raise UnsupportedVectorType(f"no vectorized tie-hash path for {t!r}")
-    if isinstance(s.dtype, pd.ArrowDtype):
-        arr = s.array._pa_array
-        return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
-    if td[0] == "decimal":
-        return pa.array(
-            [None if v is None or v is pd.NA else v for v in s],
-            type=pa.decimal128(td[1], td[2]),
-        )
-    flat = {
-        "string": pa.string(), "binary": pa.binary(),
-        "long": pa.int64(), "bigint": pa.int64(),
-        "integer": pa.int32(), "int": pa.int32(),
-        "short": pa.int16(), "smallint": pa.int16(),
-        "byte": pa.int8(), "tinyint": pa.int8(),
-        "boolean": pa.bool_(), "double": pa.float64(),
-        "float": pa.float32(), "date": pa.date32(),
-    }
-    if td[1] in ("timestamp", "timestamp_ntz"):
-        return pa.array(s)  # keep the source unit/tz (twin converts)
-    return pa.array(s, type=flat[td[1]])
-
-
 def _tie_col(df, keys: list[str], payload: list[str], dtypes):
     """int64 Series: xxhash64(payload..., _op) for rows inside
     (keys,_lsn)-duplicated tie groups, 0 elsewhere — the deterministic
     equal-LSN tie-break. The common unique-LSN path never pays any
-    hash. Tie rows hash through the VECTORIZED numpy twin
-    (:mod:`.xxhash_vec`) — a mass-redelivery batch can make every row
-    a tie, and the per-row scalar twin would then be the bucket's
-    bottleneck; nested payload types (array/struct/map) fall back to
-    the scalar twin (bit-equal, just slower — never removed, nested
-    payloads are legal). (Hash order = payload in SNAPSHOT-SCHEMA
-    order; the reader pins that order at plan time.)"""
+    hash. Tie rows hash through the VECTORIZED numpy XXH64
+    (:mod:`.xxhash_vec`) whatever the payload types, nested included —
+    a mass-redelivery batch can make every row a tie, so there is no
+    per-row path. (Hash order = payload in SNAPSHOT-SCHEMA order; the
+    reader pins that order at plan time.)"""
     import pandas as pd
 
     tie = df.duplicated(subset=keys + ["_lsn"], keep=False)
@@ -640,26 +297,10 @@ def _tie_col(df, keys: list[str], payload: list[str], dtypes):
         return hcol
     ptypes = [dtypes[c] for c in payload] + ["string"]
     sub = df.loc[tie]
-    try:
-        import pyarrow as pa
-
-        from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
-            UnsupportedVectorType,
-            spark_xxhash64_vec,
-        )
-
-        arrays = [_tie_arrow(sub[c], t)
-                  for c, t in zip(payload + ["_op"], ptypes)]
-        hcol.loc[tie] = spark_xxhash64_vec(arrays, ptypes)
-        return hcol
-    except (UnsupportedVectorType, pa.ArrowInvalid, pa.ArrowTypeError):
-        pass
-    hcol.loc[tie] = [
-        spark_xxhash64(
-            [df.at[i, c] for c in payload] + [df.at[i, "_op"]], ptypes
-        )
-        for i in df.index[tie]
-    ]
+    hcol.loc[tie] = spark_xxhash64_vec(
+        [_as_arrow(sub[c], t) for c, t in zip(payload + ["_op"], ptypes)],
+        ptypes,
+    )
     return hcol
 
 
@@ -744,80 +385,58 @@ def _resolve_live_pd_fieldwise(df, keys: list[str], payload: list[str], dtypes,
     return res[op[last] != "D"].reset_index(drop=True)[out_cols]
 
 
-def _as_arrow(s, pa_type):
-    """pandas Series -> pyarrow Array. ArrowDtype columns (the nested
-    read path) unwrap zero-copy; plain object columns (the additive
-    schema-evolution fill, typically all-None) build against the
-    declared arrow type."""
+def _arrow_type(td):
+    """Declared arrow type of a :func:`_parse_type` descriptor
+    (timestamps as Spark's session-UTC micros)."""
+    import pyarrow as pa
+
+    kind = td[0]
+    if kind == "decimal":
+        return pa.decimal128(td[1], td[2])
+    if kind == "array":
+        return pa.list_(_arrow_type(td[1]))
+    if kind == "map":
+        return pa.map_(_arrow_type(td[1]), _arrow_type(td[2]))
+    if kind == "struct":
+        return pa.struct([(name, _arrow_type(f)) for name, f in td[1]])
+    return {
+        "string": pa.string(), "binary": pa.binary(),
+        "long": pa.int64(), "bigint": pa.int64(),
+        "integer": pa.int32(), "int": pa.int32(),
+        "short": pa.int16(), "smallint": pa.int16(),
+        "byte": pa.int8(), "tinyint": pa.int8(),
+        "boolean": pa.bool_(), "double": pa.float64(),
+        "float": pa.float32(), "date": pa.date32(),
+        "timestamp": pa.timestamp("us", tz="UTC"),
+        "timestamp_ntz": pa.timestamp("us"),
+    }[td[1]]
+
+
+def _as_arrow(s, t: str):
+    """pandas Series of Spark type ``t`` -> pyarrow Array: the one
+    converter behind the tie hash and the nested diff. ArrowDtype
+    columns (the nested read path) unwrap zero-copy; flat timestamps
+    keep their source unit/tz (the hash converts units itself);
+    everything else builds against the DECLARED arrow type, so masked
+    dtypes keep NaN-as-value vs NA-as-null distinct, decimals can't
+    pick up an inferred scale (which would change the unscaled value),
+    and object columns (the additive schema-evolution fill) keep the
+    declared nesting."""
     import pandas as pd
     import pyarrow as pa
 
     if isinstance(s.dtype, pd.ArrowDtype):
         arr = s.array._pa_array
-        if isinstance(arr, pa.ChunkedArray):
-            arr = arr.combine_chunks()
-        return arr
+        return arr.combine_chunks() if isinstance(arr, pa.ChunkedArray) else arr
+    td = _parse_type(t)
+    if td[0] == "scalar":
+        if td[1] in ("timestamp", "timestamp_ntz"):
+            return pa.array(s)
+        return pa.array(s, type=_arrow_type(td))
     return pa.array(
         [None if v is None or v is pd.NA else v for v in s.tolist()],
-        type=pa_type,
+        type=_arrow_type(td),
     )
-
-
-def _canon_map_arrow(a):
-    """Arrow MapArray -> plain ``list<struct<key,value>>`` with entries
-    KEY-SORTED per row — the vectorized twin of the engine's
-    ``_canon_col`` canonical form, so map equality is entry-order-
-    insensitive. One C++ ``pc.sort_indices`` over (parent row, key)
-    reorders the flattened entries — arrow's native multi-key sort
-    stays vectorized for STRING/binary/decimal keys where a numpy
-    argsort would fall back to O(n log n) Python-object comparisons
-    (measured 3.8 s of a 5.9 s 1M-row diff; BENCH/map_diff_bench.py).
-    Null rows keep their validity. Sort order only needs to be
-    deterministic and identical across the two compared sides, not
-    Spark-exact."""
-    import numpy as np
-    import pyarrow as pa
-    import pyarrow.compute as pc
-
-    if pa.types.is_map(a.type):
-        # list_flatten/list_parent_indices have no map kernels: view the
-        # identical physical layout as list<struct<key,value>> first
-        a = a.cast(
-            pa.list_(
-                pa.struct(
-                    [
-                        pa.field("key", a.type.key_type, nullable=False),
-                        pa.field("value", a.type.item_type),
-                    ]
-                )
-            )
-        )
-    flat = pc.list_flatten(a)  # struct<key,value>; slice-/null-row-safe
-    n = len(a)
-    parent = pc.list_parent_indices(a).to_numpy(zero_copy_only=False)
-    lens = (
-        np.bincount(parent, minlength=n).astype(np.int64)
-        if len(parent)
-        else np.zeros(n, dtype=np.int64)
-    )
-    if len(parent):
-        order = pc.sort_indices(
-            pa.table({"p": pa.array(parent), "k": flat.field("key")}),
-            sort_keys=[("p", "ascending"), ("k", "ascending")],
-        )
-        flat = pc.take(flat, order)
-    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
-    mask = pc.is_null(a).to_numpy(zero_copy_only=False)
-    return pa.ListArray.from_arrays(
-        pa.array(offsets, type=pa.int32()),
-        flat,
-        mask=pa.array(mask) if mask.any() else None,
-    )
-
-
-def _map_entries_td(td):
-    """Type descriptor of :func:`_canon_map_arrow`'s output."""
-    return ("array", ("struct", (("key", td[1]), ("value", td[2]))))
 
 
 def _arrow_elem_same(vo, vn, td):
@@ -851,12 +470,6 @@ def _arrow_elem_same(vo, vn, td):
         .astype(bool)
     )
     return (eno & enn) | (~eno & ~enn & eq)
-
-
-def _nested_col_same(o, n, td, pa_type):
-    """Vectorized 'unchanged' mask for nested (array/struct) pandas
-    columns: unwrap to arrow, then :func:`_arrow_nested_same`."""
-    return _arrow_nested_same(_as_arrow(o, pa_type), _as_arrow(n, pa_type), td)
 
 
 def _arrow_nested_same(ao, an, td):
@@ -919,7 +532,7 @@ def _arrow_nested_same(ao, an, td):
     return same | (both & ok)
 
 
-def _col_same(o, n, t: str, pa_type=None):
+def _col_same(o, n, t: str):
     """Vectorized per-column 'unchanged' mask matching the engine's
     comparison (state_diff): both-null is same, null vs anything is a
     change; for doubles NaN==NaN is same, NULL<->NaN is a change, and
@@ -930,7 +543,7 @@ def _col_same(o, n, t: str, pa_type=None):
 
     td = _parse_type(t)
     if td[0] in ("array", "struct", "map"):
-        return _nested_col_same(o, n, td, pa_type)
+        return _arrow_nested_same(_as_arrow(o, t), _as_arrow(n, t), td)
     na_o = o.isna().to_numpy(dtype=bool)
     na_n = n.isna().to_numpy(dtype=bool)
     if t in ("double", "float"):
@@ -986,14 +599,13 @@ def _merge_indices(old, new, keys: list[str]):
 
 
 def _diff_states_pd(
-    old, new, keys: list[str], payload: list[str], dtypes, pa_types=None
+    old, new, keys: list[str], payload: list[str], dtypes
 ):
     """``state_diff`` twin, fully vectorized: an index-only outer join
     on the keys, boolean column masks over positionally-aligned takes,
     one output DataFrame (_change, keys, new-side payload — nulled for
     D — and the change's _lsn). Only the kept change rows are ever
-    materialized. ``pa_types`` (col -> arrow type) backs the nested-
-    column compare's schema-evolution fallback."""
+    materialized."""
     import numpy as np
     import pandas as pd
 
@@ -1019,12 +631,7 @@ def _diff_states_pd(
     for c in payload:
         ov = old[c].take(safe_o).reset_index(drop=True)
         nv = new[c].take(safe_n).reset_index(drop=True)
-        same &= _col_same(
-            ov,
-            nv,
-            dtypes.get(c, "string"),
-            pa_types.get(c) if pa_types else None,
-        )
+        same &= _col_same(ov, nv, dtypes.get(c, "string"))
     keep = ~(has_o & has_n) | ~same
     so, sn = safe_o[keep], safe_n[keep]
     ho, hn = has_o[keep], has_n[keep]
@@ -1315,19 +922,10 @@ def _resolve_side(p: _BucketTask, rel_files, extras):
 def _read_span_partition(partition: _BucketTask, out_schema):
     """Executor read of one span task (shared by both readers): resolve
     each side's live state, vectorized diff, yield arrow RecordBatches."""
-    from pyspark.sql.pandas.types import to_arrow_schema
-
     old = _resolve_side(partition, partition.old_files, partition.old_extras)
     new = _resolve_side(partition, partition.new_files, partition.new_extras)
-    pa_schema = to_arrow_schema(out_schema)
-    pa_types = {f.name: f.type for f in pa_schema}
     diff = _diff_states_pd(
-        old,
-        new,
-        partition.keys,
-        partition.payload,
-        partition.dtypes,
-        pa_types,
+        old, new, partition.keys, partition.payload, partition.dtypes
     )
     yield from _to_arrow_batches(diff, out_schema, partition.dtypes)
 

@@ -25,9 +25,8 @@ Semantics — an append-only CDC ingest (the MOR fast path):
   one-shuffle-per-epoch repartition), the sink trusts it; otherwise
   each executor computes ``pmod(xxhash64(bucket_by), bucket_count)``
   with the engine's bit-equal VECTORIZED numpy twin
-  (:mod:`.xxhash_vec` — whole-column ufunc passes, scale-safe). Only
-  exotic bucket-key types fall back to per-row Python, with a loud
-  one-time warning.
+  (:mod:`.xxhash_vec` — whole-column ufunc passes, scale-safe) for
+  every bucket-key type, nested included; there is no per-row path.
 * **Exactly-once on the resolved state** (the engine's standard
   model): executors drop rows at-or-below the table's committed
   watermark (read per task from the manifest, version-cached per
@@ -264,7 +263,6 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
         # guard, not the batch id; the id dedups same-run commit
         # retries. .option("sinkid", ...) pins it across restarts.
         self.sinkid = options.get("sinkid") or uuid.uuid4().hex[:8]
-        self._scalar_hash_fallback = False
         # opt-in inline maintenance: every N non-empty epochs, compact
         # qualifying buckets (same count+bytes trigger as merge/
         # optimize) right in the commit worker — see _auto_optimize
@@ -281,55 +279,22 @@ class _LakeSinkWriter(DataSourceStreamArrowWriter):
 
     def _bucket_ids(self, batch):
         """int64 numpy bucket id per row: trust a precomputed _bucket,
-        else the engine's bit-equal hash twin. The default (no
-        ``with_bucket``) path is VECTORIZED — whole-column numpy
-        XXH64 (:mod:`.xxhash_vec`), bit-equal to ``bucket_expr``'s
-        ``pmod(xxhash64(...), n)``, so a naive
-        ``df.writeStream.format("lake")`` is scale-safe. Only exotic
-        bucket-key types (nested arrays/structs) fall back to the
-        per-row scalar twin, with a one-time per-writer warning."""
-        import numpy as np
-
+        else the engine's bit-equal hash. The default (no
+        ``with_bucket``) path is VECTORIZED for every bucket-key type —
+        whole-column numpy XXH64 (:mod:`.xxhash_vec`), bit-equal to
+        ``bucket_expr``'s ``pmod(xxhash64(...), n)``, so a naive
+        ``df.writeStream.format("lake")`` is scale-safe."""
         if self.has_bucket:
             arr = batch.column(batch.schema.names.index(BUCKET_COL))
             return arr.to_numpy(zero_copy_only=False).astype("int64")
-        n = self.bucket_count
-        cols = [batch.column(batch.schema.names.index(c)) for c in self.bucket_by]
-        if not self._scalar_hash_fallback:
-            from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
-                UnsupportedVectorType,
-                pmod_buckets,
-                spark_xxhash64_vec,
-            )
-
-            try:
-                return pmod_buckets(
-                    spark_xxhash64_vec(cols, self.bucket_dtypes), n
-                )
-            except UnsupportedVectorType as e:
-                self._scalar_hash_fallback = True
-                import warnings
-
-                warnings.warn(
-                    f"lake sink: {e}; falling back to per-row Python "
-                    f"bucket hashing for bucket_by={self.bucket_by} — "
-                    "precompute _bucket with with_bucket() to stay "
-                    "JVM-side at scale",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-        from picsure_dictionary_etl_spark.streaming.cdf_source import (
-            spark_xxhash64,
+        from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
+            pmod_buckets,
+            spark_xxhash64_vec,
         )
 
-        pycols = [c.to_pylist() for c in cols]
-        return np.fromiter(
-            (
-                ((spark_xxhash64(vals, self.bucket_dtypes) % n) + n) % n
-                for vals in zip(*pycols)
-            ),
-            dtype="int64",
-            count=batch.num_rows,
+        cols = [batch.column(batch.schema.names.index(c)) for c in self.bucket_by]
+        return pmod_buckets(
+            spark_xxhash64_vec(cols, self.bucket_dtypes), self.bucket_count
         )
 
     def _write_parquet(self, rel: str, tbl) -> int:

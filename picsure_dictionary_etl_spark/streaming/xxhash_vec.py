@@ -1,44 +1,46 @@
 """Vectorized (numpy) twin of Spark's ``F.xxhash64`` over pyarrow
-columns — the scale-safe replacement for per-row
-:func:`~.cdf_source.spark_xxhash64` calls on executor hot paths.
-
-The scalar twin in :mod:`.cdf_source` is bit-equal to Spark's XxHash64
-and stays the reference implementation (and the fallback for exotic
-types). This module re-expresses the same algorithm column-wise:
+columns — the package's ONE runtime XXH64 beside the JVM's. The LWW
+equal-LSN tie-break (``cdf_source._tie_col``) and the lake sink's bucket
+placement (``lake_sink._bucket_ids``) both hash through it, for every
+column type the engine stores:
 
 * one uint64 numpy array carries the running seed-chained hash for
-  EVERY row at once; each bucket/key column updates it in a handful of
+  EVERY row at once; each column updates it in a handful of
   whole-column ufunc passes (C speed, no Python per row);
 * fixed-width types (long/int/boolean/timestamp/date/double/float/
   decimal(p<=18)) are single-shot: grab the arrow values buffer, apply
   the 5-instruction XXH64 long/int round;
-* var-length types (string/binary) group rows by BYTE LENGTH and hash
+* var-length types (string/binary, decimal(p>18) as Java's minimal
+  ``BigInteger.toByteArray`` form) group rows by BYTE LENGTH and hash
   each group as an (n_rows, L) uint8 matrix — the XXH64 stripe/word/
   tail loops run over L (tiny, data-independent) while every numpy op
-  spans all rows of the group. Real key columns (ids, codes) have a
-  handful of distinct lengths, so this is effectively O(distinct
-  lengths) vector passes;
-* nulls leave the running hash unchanged (Spark's rule), applied as a
-  boolean mask per column.
+  spans all rows of the group;
+* arrays chain element by element: one masked pass per element
+  POSITION over the list offsets (only rows with ``len > j`` take
+  part); structs chain field by field under the struct's validity;
+  maps hash as their canonical key-sorted ``array<struct<key,value>>``
+  (:func:`_canon_map_arrow`, the engine's ``_canon_col`` rewrite);
+* nulls — top-level values, array elements, struct fields, map values —
+  leave the running hash unchanged (Spark's rule), applied as a
+  boolean validity mask per column.
 
-Bit-equality with ``F.xxhash64`` (and hence with the scalar twin) is
-pinned by tests/test_xxhash_vec.py across every supported type,
-including the edges that broke naive ports: NaN canonicalization,
--0.0/-0.0f, empty strings, >=32-byte strings (multi-stripe), 32-bit
-truncation of int-family values, and null-skip chaining.
+Bit-equality with ``F.xxhash64`` is pinned by tests/test_xxhash_vec.py
+(vs Spark, and vs the per-row reference twin in tests/xxhash_ref.py)
+across every supported type and nesting shape, including the edges
+that broke naive ports: NaN canonicalization, -0.0/-0.0f, empty
+strings, >=32-byte strings (multi-stripe), 32-bit truncation of
+int-family values, null-skip chaining, and Java BigInteger byte-length
+edges.
 
-Unsupported-here types (arrays, structs) raise
-:class:`UnsupportedVectorType` at PLAN time so callers can fall back
-to the scalar twin explicitly — never silently slower. Decimals at
-ANY precision are vectorized (p<=18 unscaled-long; p>18 the Java
-minimal BigInteger byte-array form, grouped by byte length).
-
-All arithmetic is uint64 numpy ARRAY ops (C wraparound semantics ==
-the scalar twin's ``& _M`` masking); no scalar numpy temporaries, so
-no overflow warnings and no Python-int boxing.
+All arithmetic is uint64 numpy ARRAY ops (C wraparound semantics);
+no scalar numpy temporaries, so no overflow warnings and no Python-int
+boxing.
 """
 
 from __future__ import annotations
+
+import re
+from functools import lru_cache
 
 import numpy as np
 import pyarrow as pa
@@ -56,9 +58,53 @@ _P1P2 = np.uint64((0x9E3779B185EBCA87 + 0xC2B2AE3D27D4EB4F) & 0xFFFFFFFFFFFFFFFF
 _P5_8 = np.uint64(0x27D4EB2F165667C5 + 8)
 _P5_4 = np.uint64(0x27D4EB2F165667C5 + 4)
 
+_DECIMAL_RE = re.compile(r"^decimal\((\d+),(\d+)\)$")
 
-class UnsupportedVectorType(TypeError):
-    """The column type has no vectorized path — use the scalar twin."""
+
+def _split_top(s: str) -> list[str]:
+    """Split a simpleString field list on TOP-LEVEL commas only
+    (nested ``array<struct<a:int,b:int>>`` commas don't count; neither
+    does the comma inside ``decimal(16,2)`` — parens nest too)."""
+    parts, depth, cur = [], 0, []
+    for ch in s:
+        if ch in "<(":
+            depth += 1
+        elif ch in ">)":
+            depth -= 1
+        if ch == "," and depth == 0:
+            parts.append("".join(cur))
+            cur = []
+        else:
+            cur.append(ch)
+    if cur:
+        parts.append("".join(cur))
+    return parts
+
+
+@lru_cache(maxsize=None)
+def _parse_type(t: str):
+    """Spark simpleString -> type descriptor tree:
+    ('scalar', name) | ('decimal', p, s) | ('array', elem_td) |
+    ('map', key_td, value_td) |
+    ('struct', ((field_name, field_td), ...)) | ('other', raw)."""
+    t = t.strip()
+    m = _DECIMAL_RE.match(t)
+    if m:
+        return ("decimal", int(m.group(1)), int(m.group(2)))
+    if t.startswith("array<") and t.endswith(">"):
+        return ("array", _parse_type(t[6:-1]))
+    if t.startswith("map<") and t.endswith(">"):
+        kt, vt = _split_top(t[4:-1])
+        return ("map", _parse_type(kt), _parse_type(vt))
+    if t.startswith("struct<") and t.endswith(">"):
+        fields = []
+        for part in _split_top(t[7:-1]):
+            name, sub = part.split(":", 1)
+            fields.append((name, _parse_type(sub)))
+        return ("struct", tuple(fields))
+    if "<" in t:  # array-of-array etc. handled by recursion above
+        return ("other", t)
+    return ("scalar", t)
 
 
 def _rotl(x: np.ndarray, r: int) -> np.ndarray:
@@ -253,35 +299,126 @@ def _hash_wide_decimal(arr: pa.Array, h: np.ndarray, valid: np.ndarray) -> np.nd
     return out
 
 
+def _canon_map_arrow(a: pa.Array) -> pa.ListArray:
+    """Arrow MapArray -> plain ``list<struct<key,value>>`` with entries
+    KEY-SORTED per row: the canonical map form the hash and the change
+    feed diff both use, the vectorized twin of the engine's
+    ``_canon_col`` (``array_sort(map_entries(m))``). The entry order IS
+    Spark's ``array_sort`` order, and the hash depends on it: entries
+    chain in that order. Arrow's stable ``pc.sort_indices`` over
+    (parent row, key) matches Spark's key ordering for every scalar key
+    type — strings and binaries by unsigned bytes (== UTF-8 code-point
+    order), numbers/dates/timestamps/decimals by value, false < true,
+    NaN greatest; Spark dedups keys and normalizes -0.0 at map
+    creation, so the comparison never reaches the value field. The
+    C++ multi-key sort stays vectorized for STRING/binary/decimal keys
+    where a numpy argsort would fall back to O(n log n) Python-object
+    comparisons (measured 3.8 s of a 5.9 s 1M-row diff;
+    BENCH/map_diff_bench.py). Null rows keep their validity."""
+    if pa.types.is_map(a.type):
+        # list_flatten/list_parent_indices have no map kernels: view the
+        # identical physical layout as list<struct<key,value>> first
+        a = a.cast(
+            pa.list_(
+                pa.struct(
+                    [
+                        pa.field("key", a.type.key_type, nullable=False),
+                        pa.field("value", a.type.item_type),
+                    ]
+                )
+            )
+        )
+    flat = pc.list_flatten(a)  # struct<key,value>; slice-/null-row-safe
+    n = len(a)
+    parent = pc.list_parent_indices(a).to_numpy(zero_copy_only=False)
+    lens = (
+        np.bincount(parent, minlength=n).astype(np.int64)
+        if len(parent)
+        else np.zeros(n, dtype=np.int64)
+    )
+    if len(parent):
+        order = pc.sort_indices(
+            pa.table({"p": pa.array(parent), "k": flat.field("key")}),
+            sort_keys=[("p", "ascending"), ("k", "ascending")],
+        )
+        flat = pc.take(flat, order)
+    offsets = np.concatenate(([0], np.cumsum(lens))).astype(np.int32)
+    mask = pc.is_null(a).to_numpy(zero_copy_only=False)
+    return pa.ListArray.from_arrays(
+        pa.array(offsets, type=pa.int32()),
+        flat,
+        mask=pa.array(mask) if mask.any() else None,
+    )
+
+
+def _map_entries_td(td):
+    """Type descriptor of :func:`_canon_map_arrow`'s output."""
+    return ("array", ("struct", (("key", td[1]), ("value", td[2]))))
+
+
+def _hash_list(arr: pa.Array, elem_td, h: np.ndarray, valid: np.ndarray) -> np.ndarray:
+    """array column: chain element ``j`` of every row with ``len > j``
+    in one masked pass per element POSITION over the list offsets.
+    Null rows count as empty; null elements skip via the element
+    column's own validity mask (Spark: ``[1,null,2]`` == ``[1,2]``)."""
+    offsets = arr.offsets.to_numpy().astype(np.int64)  # slice-aware
+    lens = np.where(valid, np.diff(offsets), 0)
+    starts, values = offsets[:-1], arr.values  # values: unsliced child
+    out = h.copy()
+    rows = np.flatnonzero(lens > 0)
+    j = 0
+    while len(rows):
+        elems = values.take(pa.array(starts[rows] + j))
+        out[rows] = _hash_column(elems, elem_td, out[rows])
+        j += 1
+        rows = rows[lens[rows] > j]
+    return out
+
+
 _INT_FAMILY = {"integer", "int", "short", "smallint", "byte", "tinyint"}
 
 
-def _hash_column(arr: pa.Array, dtype: str, h: np.ndarray) -> np.ndarray:
+def _hash_column(arr: pa.Array, td, h: np.ndarray) -> np.ndarray:
     """Chain one column into the running per-row hash ``h`` (uint64
-    array), exactly as Spark's seed-chained XxHash64 does. ``dtype`` is
-    the Spark simpleString name."""
+    array), exactly as Spark's seed-chained XxHash64 does. ``td`` is
+    the column's :func:`_parse_type` descriptor."""
     if isinstance(arr, pa.ChunkedArray):
         arr = arr.combine_chunks()
     n = len(arr)
     if arr.null_count == n:
         return h  # all-null column leaves every row's hash unchanged
+    kind = td[0]
+    if kind == "map":
+        return _hash_column(_canon_map_arrow(arr), _map_entries_td(td), h)
+    if kind == "struct":
+        # flatten() merges the struct's validity into every child, so
+        # a null struct skips all its fields == leaves ``h`` unchanged
+        for child, (_, ftd) in zip(arr.flatten(), td[1]):
+            h = _hash_column(child, ftd, h)
+        return h
     valid = (
         np.ones(n, dtype=bool)
         if arr.null_count == 0
         else arr.is_valid().to_numpy(zero_copy_only=False)
     )
-    t = dtype.strip()
+    if kind == "array":
+        return _hash_list(arr, td[1], h, valid)
+    if kind == "decimal" and td[1] > 18:
+        return _hash_wide_decimal(arr, h, valid)
+    t = td[1]
     if t in ("string", "binary"):
         if pa.types.is_fixed_size_binary(arr.type):
             # normalize to var-binary so one matrix path serves both
             arr = arr.cast(pa.binary())
         return _hash_varlen(arr, h, valid)
-    if t in ("long", "bigint"):
+    if kind == "decimal":  # p<=18: Spark hashes the unscaled LONG
+        new = _hash_long_vec(_decimal_low64(arr).view(np.uint64), h)
+    elif t in ("long", "bigint"):
         v = _fixed_values(arr, np.int64).view(np.uint64)
         new = _hash_long_vec(v, h)
     elif t in _INT_FAMILY:
-        # scalar twin: int(v) & 0xFFFFFFFF — the 32-bit two's-complement
-        # pattern zero-extended (NOT sign-extended) to 64 bits
+        # Spark hashes the 32-bit two's-complement pattern zero-extended
+        # (NOT sign-extended) to 64 bits
         if pa.types.is_int8(arr.type) or pa.types.is_int16(arr.type):
             v32 = _fixed_values(
                 arr, np.int8 if pa.types.is_int8(arr.type) else np.int16
@@ -322,18 +459,7 @@ def _hash_column(arr: pa.Array, dtype: str, h: np.ndarray) -> np.ndarray:
         bits[np.isnan(f)] = np.uint32(_NAN32)
         new = _hash_int_vec(bits.astype(np.uint64), h)
     else:
-        from picsure_dictionary_etl_spark.streaming.cdf_source import _parse_type
-
-        td = _parse_type(t)
-        if td[0] == "decimal" and td[1] <= 18:
-            new = _hash_long_vec(_decimal_low64(arr).view(np.uint64), h)
-        elif td[0] == "decimal":
-            return _hash_wide_decimal(arr, h, valid)
-        else:
-            raise UnsupportedVectorType(
-                f"no vectorized xxhash64 path for type {t!r}; use the "
-                "scalar spark_xxhash64 twin"
-            )
+        raise TypeError(f"xxhash64: no hash path for column type {td!r}")
     if arr.null_count == 0:
         return new
     return np.where(valid, new, h)
@@ -344,17 +470,17 @@ def spark_xxhash64_vec(
 ) -> np.ndarray:
     """``F.xxhash64(c1, c2, ...)`` for whole pyarrow columns at once:
     returns a SIGNED int64 numpy array, bit-equal to Spark's result per
-    row (and to the scalar :func:`~.cdf_source.spark_xxhash64` twin).
-
-    Raises :class:`UnsupportedVectorType` (a ``TypeError``) before any
-    work when a column type has no vector path — callers catch it and
-    take the scalar fallback once, at plan time."""
+    row. ``dtypes`` are Spark simpleString type names ('string',
+    'bigint', 'decimal(30,4)', 'array<struct<name:string,args:string>>',
+    'map<string,double>', ...); map columns hash as their canonical
+    key-sorted entry arrays, as the engine's ``_canon_col`` rewrite
+    feeds them to ``F.xxhash64``."""
     if not arrays:
         raise ValueError("spark_xxhash64_vec needs at least one column")
     n = len(arrays[0])
     h = np.full(n, np.uint64(seed), dtype=np.uint64)
     for arr, t in zip(arrays, dtypes):
-        h = _hash_column(arr, t, h)
+        h = _hash_column(arr, _parse_type(t), h)
     return h.view(np.int64)
 
 

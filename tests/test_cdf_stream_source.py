@@ -13,8 +13,8 @@ from picsure_dictionary_etl_spark.lake.table import LakeTable
 from picsure_dictionary_etl_spark.streaming.cdf_source import (
     LakeChangeFeedDataSource,
     _resolve_live_pd,
-    spark_xxhash64,
 )
+from tests.xxhash_ref import spark_xxhash64
 
 TS = datetime.datetime(2024, 1, 1, 12, 0, 0)
 COLS = ["_change", "conv_id", "turn_idx", "role", "text", "tool", "ts", "_lsn"]

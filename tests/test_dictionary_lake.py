@@ -1,6 +1,8 @@
 """Incremental dictionary refresh lifecycle: identical re-POST is a
 no-op, a mutation touches only the changed concept, a vanished concept
-deletes — composed from the NHANES reference fixture."""
+deletes — composed from the in-repo columnMeta fixture
+(tests/column_meta_fixture.py); the NHANES golden counts live in the
+skip-guarded tests/test_dictionary_parity.py."""
 
 from pyspark.sql import functions as F
 
@@ -14,7 +16,7 @@ from picsure_dictionary_etl_spark.pipeline.dictionary_lake import (
     refresh_from_csv,
 )
 
-NHANES = "/root/reference/src/test/resources/columnMeta.csv"
+from tests.column_meta_fixture import COLUMN_META, expected_concepts
 
 
 def _live(table):
@@ -24,18 +26,21 @@ def _live(table):
 def test_refresh_lifecycle(spark, tmp_path):
     t = concept_table(spark, str(tmp_path / "concepts"), bucket_count=4)
 
-    # initial load: the 15-node demographics golden tree
-    r1, errors = refresh_from_csv(t, spark, NHANES, "load-1", ["demographics"])
-    assert _live(t).count() == 15
-    assert r1.metrics["rows_in"] == 15
+    # initial load: the fixture's demographics tree (leaves + ancestors)
+    want, _ = expected_concepts(["demographics"])
+    n = len(want)
+    r1, errors = refresh_from_csv(t, spark, COLUMN_META, "load-1", ["demographics"])
+    assert {r["concept_path"] for r in _live(t).collect()} == want
+    assert r1.metrics["rows_in"] == n
+    assert errors.count() == 0
 
     # identical re-POST: empty batch, zero rows, new watermark only
-    r2, _ = refresh_from_csv(t, spark, NHANES, "load-2", ["demographics"])
+    r2, _ = refresh_from_csv(t, spark, COLUMN_META, "load-2", ["demographics"])
     assert r2.metrics.get("rows_in") in (0, None)
-    assert _live(t).count() == 15
+    assert _live(t).count() == n
 
     # mutate one concept + drop one leaf: only those keys move
-    nodes, _ = load_column_meta_dictionary(spark, NHANES, ["demographics"])
+    nodes, _ = load_column_meta_dictionary(spark, COLUMN_META, ["demographics"])
     victim = [
         r["concept_path"]
         for r in nodes.filter(F.col("is_leaf") & (F.col("name") != "SEX"))
@@ -50,7 +55,7 @@ def test_refresh_lifecycle(spark, tmp_path):
     r3 = refresh_concepts(t, mutated, "load-3")
     live = {r["concept_path"]: r["name"] for r in _live(t).collect()}
     assert victim not in live  # H5 diff-driven delete
-    assert len(live) == 14
+    assert len(live) == n - 1
     assert "SEX_RENAMED" in set(live.values())
     # only the renamed row + the tombstone entered the merge
     assert r3.metrics["rows_in"] == 2
@@ -58,7 +63,7 @@ def test_refresh_lifecycle(spark, tmp_path):
     # exactly-once: redelivering load-3 is a committed no-op
     r4 = refresh_concepts(t, mutated, "load-3")
     assert r4.metrics.get("skipped_duplicate_batch")
-    assert _live(t).count() == 14
+    assert _live(t).count() == n - 1
 
 
 def test_compaction_writes_key_sorted_files(spark, tmp_path):

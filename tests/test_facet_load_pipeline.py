@@ -7,6 +7,7 @@ import pytest
 from picsure_dictionary_etl_spark.operators.facets import Expression, FacetRule
 from picsure_dictionary_etl_spark.pipeline.dictionary import load_column_meta_dictionary
 from picsure_dictionary_etl_spark.pipeline.facet_load import load_facets
+from tests.column_meta_fixture import COLUMN_META, expected_concepts
 
 RULES = {
     "labs": FacetRule("labs", [[Expression("exactly", "lab", 1)]]),
@@ -68,9 +69,7 @@ def test_changed_rule_remaps_only_that_facet(spark, concepts):
 
 
 def test_end_to_end_with_dictionary_pipeline(spark):
-    nodes, _ = load_column_meta_dictionary(
-        spark, "/root/reference/src/test/resources/columnMeta.csv", ["demographics"]
-    )
+    nodes, _ = load_column_meta_dictionary(spark, COLUMN_META, ["demographics"])
     rules = {
         "demographics": FacetRule(
             "demographics", [[Expression("exactly", "demographics", 0)]]
@@ -78,5 +77,7 @@ def test_end_to_end_with_dictionary_pipeline(spark):
     }
     leaves = nodes.filter(nodes.is_leaf)
     mappings, _, report = load_facets(leaves, rules)
-    # every demographics leaf maps (14 leaves of the 15-node golden tree)
-    assert report["mapping_counts"]["demographics"] == leaves.count() == 14
+    # every demographics leaf of the fixture maps
+    _, want_leaves = expected_concepts(["demographics"])
+    assert {r["concept_path"] for r in leaves.collect()} == want_leaves
+    assert report["mapping_counts"]["demographics"] == len(want_leaves)

@@ -1,10 +1,10 @@
 """The equal-LSN tie-break hash in the executor resolve
-(`_tie_col`) is VECTORIZED (numpy XXH64 twin) for flat payload types —
-a mass-redelivery batch can make every row of a bucket a tie, so the
-per-row scalar twin cannot be the only path. Parity: the vectorized
-result must be bit-identical to the scalar twin (which is itself
-bit-equal to F.xxhash64 — tests/test_cdf_stream_source.py); nested
-payloads (array/struct/map) take the scalar fallback unchanged.
+(`_tie_col`) is VECTORIZED (numpy XXH64 twin) for every payload type,
+flat and nested — a mass-redelivery batch can make every row of a
+bucket a tie, so there is no per-row path. Parity: the vectorized
+result must be bit-identical to the per-row reference twin in
+tests/xxhash_ref.py (which is itself bit-equal to F.xxhash64 —
+tests/test_cdf_stream_source.py).
 
 No Spark session needed — both twins are pure Python/numpy.
 """
@@ -16,10 +16,8 @@ import numpy as np
 import pandas as pd
 import pytest
 
-from picsure_dictionary_etl_spark.streaming.cdf_source import (
-    _tie_col,
-    spark_xxhash64,
-)
+from picsure_dictionary_etl_spark.streaming.cdf_source import _tie_col
+from tests.xxhash_ref import spark_xxhash64
 
 KEYS = ["id"]
 
@@ -104,46 +102,73 @@ def test_no_ties_pays_no_hash():
     assert (out == 0).all()
 
 
-def test_nested_payload_falls_back_to_scalar_twin():
-    """A map payload column has no vector path: `_tie_col` must land on
-    the scalar fallback and still match it exactly."""
+def _tool_calls(n, seed=3):
+    """The benchmark's nested payload shape: a nullable
+    ``array<struct<name,args>>`` column, arrow-backed as the bucket read
+    materializes it."""
     import pyarrow as pa
 
-    n = 60
+    rng = np.random.default_rng(seed)
+    typ = pa.list_(pa.struct([("name", pa.string()), ("args", pa.string())]))
+    vals = [
+        None if i % 13 == 0 else [
+            None if (i + j) % 17 == 0 else
+            {"name": f"tool_{int(rng.integers(0, 9))}",
+             "args": None if (i + j) % 7 == 0 else
+             '{"q": "' + "é" * int(rng.integers(0, 30)) + '"}'}
+            for j in range(i % 4)
+        ]
+        for i in range(n)
+    ]
+    return pd.Series(pd.arrays.ArrowExtensionArray(pa.array(vals, typ)),
+                     dtype=pd.ArrowDtype(typ))
+
+
+NESTED_DTYPES = {**DTYPES,
+                 "tool_calls": "array<struct<name:string,args:string>>"}
+
+
+def test_nested_payload_tie_hash_matches_oracle():
+    """Map and array<struct> payload columns hash on the vector path
+    bit-equal to the reference twin, beside every flat type."""
+    import pyarrow as pa
+
+    n = 2000  # _frame is all ties at multiples of 2000 rows
     typ = pa.map_(pa.string(), pa.int64())
     maps = pa.array(
-        [None if i % 9 == 0 else [(f"k{j}", i + j) for j in range(i % 4)]
+        [None if i % 9 == 0 else [(f"k{j}é", i + j) for j in range(i % 4)][::-1]
          for i in range(n)], type=typ)
-    df = pd.DataFrame({
-        "id": [f"k{i % 20}" for i in range(n)],
-        "_lsn": pd.array([(i // 20) % 2 for i in range(n)], dtype="Int64"),
-        "s": [f"v{i}" for i in range(n)],
-        "m": pd.Series(pd.arrays.ArrowExtensionArray(maps),
-                       dtype=pd.ArrowDtype(typ)),
-        "_op": ["I"] * n,
-    })
-    dtypes = {"id": "string", "s": "string", "m": "map<string,bigint>",
-              "_lsn": "bigint"}
-    vec = _tie_col(df, KEYS, ["s", "m"], dtypes)
-    scal = _scalar_tie(df, ["s", "m"], dtypes)
+    df = _frame(n=n)
+    df["m"] = pd.Series(pd.arrays.ArrowExtensionArray(maps),
+                        dtype=pd.ArrowDtype(typ))
+    df["tool_calls"] = _tool_calls(n)
+    dtypes = {**NESTED_DTYPES, "m": "map<string,bigint>"}
+    payload = PAYLOAD + ["m", "tool_calls"]
+    vec = _tie_col(df, KEYS, payload, dtypes)
+    scal = _scalar_tie(df, payload, dtypes)
     pd.testing.assert_series_equal(vec, scal)
-    assert (vec != 0).any()
+    assert (vec != 0).all()
 
 
 def test_vectorized_tie_hash_beats_scalar_on_a_tied_bucket():
-    """Throughput guard: on an all-ties 200k-row frame the vectorized
-    path must be well clear of the scalar loop (the whole point);
-    asserted loosely (>=5x) to stay robust to host steal."""
+    """Throughput guard: on an all-ties 200k-row frame — flat payloads,
+    and the same frame plus a nested ``tool_calls`` column — the
+    vectorized path must be well clear of the per-row loop (the whole
+    point); asserted loosely (>=5x) to stay robust to host steal."""
     import time
 
     df = _frame(n=200_000)
-    t0 = time.perf_counter()
-    _tie_col(df, KEYS, PAYLOAD, DTYPES)
-    vec_s = time.perf_counter() - t0
-    sl = df.iloc[:20_000]
-    t0 = time.perf_counter()
-    _scalar_tie(sl, PAYLOAD, DTYPES)
-    scal_s = (time.perf_counter() - t0) * 10  # extrapolate to 200k
-    if scal_s < 5 * vec_s:
-        pytest.fail(f"vectorized tie hash not clearly faster: "
-                    f"vec={vec_s:.3f}s scalar_est={scal_s:.3f}s")
+    df["tool_calls"] = _tool_calls(len(df))
+    for payload, dtypes in ((PAYLOAD, DTYPES),
+                            (PAYLOAD + ["tool_calls"], NESTED_DTYPES)):
+        t0 = time.perf_counter()
+        _tie_col(df, KEYS, payload, dtypes)
+        vec_s = time.perf_counter() - t0
+        sl = df.iloc[:20_000]
+        t0 = time.perf_counter()
+        _scalar_tie(sl, payload, dtypes)
+        scal_s = (time.perf_counter() - t0) * 10  # extrapolate to 200k
+        if scal_s < 5 * vec_s:
+            pytest.fail(f"vectorized tie hash not clearly faster on "
+                        f"{payload}: vec={vec_s:.3f}s "
+                        f"scalar_est={scal_s:.3f}s")
