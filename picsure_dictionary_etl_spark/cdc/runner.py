@@ -25,20 +25,28 @@ import time
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
+from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
 from picsure_dictionary_etl_spark.cdc.envelope import (
     TRANSCRIPT_KEY,
     transcript_table_schema,
 )
-from picsure_dictionary_etl_spark.cdc.normalize import normalize_events, split_dead_letter
+from picsure_dictionary_etl_spark.cdc.normalize import (
+    normalize_events,
+    split_dead_letter,
+    valid_event_pred,
+)
 from picsure_dictionary_etl_spark.lake.merge import (
     LSN_COL,
     OP_COL,
     SYSTEM_COLS,
     MergeResult,
+    _payload_cols,
+    _read_raw,
     merge_into,
+    resolve_live,
 )
 from picsure_dictionary_etl_spark.lake.table import LakeTable
 
@@ -160,11 +168,6 @@ class CdcRunner:
         # local-only footer reads — works for URI DLQ dirs too):
         # malformed rows must never vanish silently (reference: error
         # registry always on, loading/ColumnMetaErrorWriter.java:21-38)
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
-
-        from picsure_dictionary_etl_spark.cdc.normalize import valid_event_pred
-
         dead_obs = Observation(f"dead-{batch_id}")
         events = events.observe(
             dead_obs,
@@ -223,7 +226,7 @@ class CdcRunner:
             result.metrics["vacuum"] = self.table.vacuum(
                 keep_snapshots=self.config.vacuum_keep_snapshots
             )
-        if dead_obs is not None and not result.metrics.get("skipped_duplicate_batch"):
+        if not result.metrics.get("skipped_duplicate_batch"):
             try:
                 result.metrics["dead_letter_rows"] = int(dead_obs.get["dead_rows"] or 0)
             except Exception:
@@ -249,15 +252,11 @@ class CdcRunner:
         reads only its slice.
         """
         if max_lsn is None:
-            from pyspark.sql import functions as F
-
             max_lsn = events.agg(F.max(LSN_COL)).collect()[0][0]
             if max_lsn is None:
                 return []
         results = []
         lo = self.watermark()
-        from pyspark.sql import functions as F
-
         while lo < max_lsn:
             hi = min(lo + lsn_step, max_lsn)
             batch = events.filter((F.col(LSN_COL) > lo) & (F.col(LSN_COL) <= hi))
@@ -276,44 +275,38 @@ class CdcRunner:
         holding field-wise (``_pu``-tagged) deltas resolve with the
         mixed field-wise reduce under the committed ``update_policy``."""
         snap = self.table.current()
-        keys = snap.key_cols
-        from picsure_dictionary_etl_spark.lake.merge import (
-            _payload_cols,
-            _read_raw,
-            resolve_live,
-        )
+        return self._live(snap, rel_files=snap.all_files())
 
-        payload = _payload_cols(snap)
-        raw = _read_raw(self.table, snap, keys, payload, rel_files=snap.all_files())
+    def conversation(self, conv_id: str) -> DataFrame:
+        """Serving-path point lookup: one conversation's live turns in
+        turn order, reading only the bucket ``conv_id`` hashes to (plus
+        row-group skipping inside it) — never a table scan.
+
+        Runs as ONE Spark job with ONE task and no exchange: the pruned
+        scan is coalesced to a single partition, and ``SinglePartition``
+        satisfies both the LWW aggregate's clustering and the
+        ``orderBy``'s ordering, so Catalyst plans no shuffle and no
+        range-sampling job. That is safe because the scan is one bucket,
+        whose file count compaction bounds, and the pushed key filter
+        leaves one conversation's rows. Multi-key ``read_keys`` callers
+        keep their parallel scan."""
+        snap = self.table.current()
+        scan = self.table.read_keys([conv_id], snap).coalesce(1)
+        return self._live(snap, df=scan).orderBy("turn_idx")
+
+    # ---------- internals ----------
+
+    def _live(self, snap, **read) -> DataFrame:
+        """Live (keys + payload) rows of ``snap`` under its committed
+        ``update_policy``; ``read`` picks the raw rows as in
+        :func:`_read_raw` (``rel_files=`` or a pruned ``df=``)."""
+        keys, payload = snap.key_cols, _payload_cols(snap)
+        raw = _read_raw(self.table, snap, keys, payload, **read)
         live = resolve_live(
             raw, keys, payload,
             policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
         )
         return live.select(*keys, *payload)
-
-    def conversation(self, conv_id: str) -> DataFrame:
-        """Serving-path point lookup: one conversation's live turns in
-        turn order, reading only the bucket ``conv_id`` hashes to (plus
-        row-group skipping inside it) — never a table scan."""
-        snap = self.table.current()
-        from picsure_dictionary_etl_spark.lake.merge import (
-            _payload_cols,
-            _read_raw,
-            resolve_live,
-        )
-
-        payload = _payload_cols(snap)
-        raw = _read_raw(
-            self.table, snap, snap.key_cols, payload,
-            df=self.table.read_keys([conv_id], snap),
-        )
-        live = resolve_live(
-            raw, snap.key_cols, payload,
-            policy=snap.properties.get("update_policy", "row"), schema=snap.schema,
-        )
-        return live.select(*snap.key_cols, *payload).orderBy("turn_idx")
-
-    # ---------- internals ----------
 
     def _maybe_adapt_salt(self, metrics: dict) -> None:
         """Engage/disengage auto-salting from the commit's per-bucket

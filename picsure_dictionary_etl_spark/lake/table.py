@@ -38,18 +38,26 @@ single-flight ``ReentrantLock`` (``loading/DictionaryLoaderController.java:58``)
 
 from __future__ import annotations
 
+import functools
 import json
+import operator
 import os
 import time
 import uuid
 from dataclasses import dataclass, field
 from typing import Any
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+from pyspark.sql.pandas.types import to_arrow_type
 
 from picsure_dictionary_etl_spark.lake.metadata_io import MetadataIO, PosixMetadataIO
+from picsure_dictionary_etl_spark.streaming.xxhash_vec import (
+    pmod_buckets,
+    spark_xxhash64_vec,
+)
 
 META_DIR = "_meta"
 VERSION_FILE = "VERSION"
@@ -194,6 +202,23 @@ def bucket_expr(bucket_by: list[str], bucket_count: int) -> F.Column:
     partitioning path.
     """
     return F.pmod(F.xxhash64(*[F.col(c) for c in bucket_by]), F.lit(bucket_count)).cast("int")
+
+
+def key_bucket_ids(
+    dtypes: list[T.DataType], key_tuples: list[tuple], bucket_count: int
+) -> list[int]:
+    """Driver-side twin of :func:`bucket_expr`: the bucket id of each
+    key tuple (one value per bucket column, typed by ``dtypes``), with
+    no Spark job. Each value goes through its column's
+    ``DataType.toInternal`` — the conversion a DataFrame built from
+    Python rows applies — and the columns hash through the runtime hash
+    plane that also places sink rows (:mod:`..streaming.xxhash_vec`)."""
+    arrays = [
+        pa.array([dt.toInternal(k[i]) for k in key_tuples], to_arrow_type(dt))
+        for i, dt in enumerate(dtypes)
+    ]
+    hashes = spark_xxhash64_vec(arrays, [dt.simpleString() for dt in dtypes])
+    return pmod_buckets(hashes, bucket_count).tolist()
 
 
 class LakeTable:
@@ -468,33 +493,32 @@ class LakeTable:
         further). ``bucket_key_values`` is a list of values (single
         bucket column) or tuples (composite).
 
-        The bucket ids are computed by the same JVM xxhash64 expression
-        the writer used (a bounded collect over len(values) literals),
-        and the final equality filter runs on the pruned scan."""
+        Launches no Spark job: the bucket ids come from
+        :func:`key_bucket_ids` on the driver, bit-equal to
+        :func:`bucket_expr`, and the equality filters run on the pruned
+        scan."""
         snap = snapshot or self.current()
         cols = snap.bucket_by
         vals = [
-            v if isinstance(v, (list, tuple)) else (v,) for v in bucket_key_values
+            tuple(v) if isinstance(v, (list, tuple)) else (v,)
+            for v in bucket_key_values
         ]
-        kdf = self.spark.createDataFrame(
-            vals, T.StructType([snap.schema[c] for c in cols])
-        )
-        buckets = sorted(
-            r[0]
-            for r in kdf.select(
-                bucket_expr(cols, snap.bucket_count).alias("b")
-            ).distinct().collect()
-        )
+        dtypes = [snap.schema[c].dataType for c in cols]
+        buckets = sorted(set(key_bucket_ids(dtypes, vals, snap.bucket_count)))
         scan = self.read_buckets(buckets, snap)
         # per-column In() filters push into the parquet scan, so the
-        # key-sorted row groups inside each bucket file are skipped too
-        # (a semi-join alone never reaches PushedFilters); for composite
-        # bucket keys the exact tuple match follows as a semi-join
+        # key-sorted row groups inside each bucket file are skipped too;
+        # for composite bucket keys they admit the cross product of the
+        # per-column values, so the exact tuple match follows
         for i, c in enumerate(cols):
             scan = scan.filter(F.col(c).isin([v[i] for v in vals]))
-        if len(cols) == 1:
+        if len(cols) == 1 or not vals:
             return scan
-        return scan.join(F.broadcast(kdf.distinct()), on=cols, how="left_semi")
+        exact = functools.reduce(operator.or_, [
+            functools.reduce(operator.and_, [F.col(c) == F.lit(x) for c, x in zip(cols, v)])
+            for v in dict.fromkeys(vals)
+        ])
+        return scan.filter(exact)
 
     def _read_files(self, snap: Snapshot, rel_files: list[str]) -> DataFrame:
         if not rel_files:

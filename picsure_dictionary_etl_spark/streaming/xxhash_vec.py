@@ -1,8 +1,9 @@
 """Vectorized (numpy) twin of Spark's ``F.xxhash64`` over pyarrow
 columns — the package's ONE runtime XXH64 beside the JVM's. The LWW
-equal-LSN tie-break (``cdf_source._tie_col``) and the lake sink's bucket
-placement (``lake_sink._bucket_ids``) both hash through it, for every
-column type the engine stores:
+equal-LSN tie-break (``cdf_source._tie_col``), the lake sink's bucket
+placement (``lake_sink._bucket_ids``) and the point-lookup bucket ids
+(``lake.table.key_bucket_ids``) all hash through it, for every column
+type the engine stores:
 
 * one uint64 numpy array carries the running seed-chained hash for
   EVERY row at once; each column updates it in a handful of

@@ -1,6 +1,7 @@
 """Plan-shape regression tests: pushdown, pruning, broadcast — the
 Catalyst behaviors the 100 TB design depends on (SURVEY.md §4)."""
 
+import pytest
 from pyspark.sql import functions as F
 
 from picsure_dictionary_etl_spark.plans.explain import (
@@ -267,3 +268,37 @@ def test_keyed_pivot_skips_distinct_keys_job(spark):
 
     assert ({tuple(r) for r in keyed.collect()}
             == {tuple(r) for r in unkeyed.collect()})
+
+
+@pytest.mark.parametrize("policy", ["row", "coalesce"])
+def test_point_lookup_is_one_exchange_free_job(spark, tmp_path, policy):
+    """CdcRunner.conversation plans no exchange and runs as ONE job of
+    ONE task, on a row-policy table and on a field-wise (``_pu``) one:
+    the single-bucket scan is coalesced to one partition, which
+    satisfies both the LWW aggregate and the turn-order sort."""
+    from picsure_dictionary_etl_spark.cdc.generator import change_events
+    from picsure_dictionary_etl_spark.cdc.runner import CdcRunner, RunnerConfig
+
+    r = CdcRunner(spark, RunnerConfig(
+        table_root=str(tmp_path / "t"), bucket_count=8, update_policy=policy))
+    r.replay(change_events(spark, 2000, n_convs=20, delete_ratio=0.1), lsn_step=1000)
+    assert ("_pu" in r.table.current().schema.names) == (policy != "row")
+    state = r.state().collect()
+    conv = sorted({row["conv_id"] for row in state})[0]
+
+    q = r.conversation(conv)
+    assert_exchange_count(q, 0)
+
+    sc = spark.sparkContext
+    group = f"point-lookup-{policy}"
+    sc.setJobGroup(group, "one point lookup")
+    try:
+        got = q.collect()
+    finally:
+        sc.setJobGroup(None, None)
+    jobs = list(sc.statusTracker().getJobIdsForGroup(group))
+    assert len(jobs) == 1, jobs
+    stages = sc.statusTracker().getJobInfo(jobs[0]).stageIds
+    assert [sc.statusTracker().getStageInfo(s).numTasks for s in stages] == [1]
+    assert got == sorted((row for row in state if row["conv_id"] == conv),
+                         key=lambda row: row["turn_idx"])
